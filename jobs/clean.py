@@ -45,7 +45,10 @@ from machine_readability_checker_spark.operators.extract import extract  # noqa:
 from machine_readability_checker_spark.operators.repartition import (  # noqa: E402
     salted_repartition,
 )
-from machine_readability_checker_spark.session import get_spark  # noqa: E402
+from machine_readability_checker_spark.session import (  # noqa: E402
+    default_cores,
+    get_spark,
+)
 from machine_readability_checker_spark.sources.fixtures import gen_corpus  # noqa: E402
 
 
@@ -67,7 +70,7 @@ def main() -> None:
     ap.add_argument("--version", type=int, default=None)
     ap.add_argument("--gen", type=int, default=0)
     ap.add_argument("--out", required=True)
-    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cores", type=int, default=int(default_cores()))
     ap.add_argument("--jaccard", type=float, default=0.8)
     ap.add_argument(
         "--require-known-lang", action="store_true",

@@ -38,7 +38,10 @@ from machine_readability_checker_spark.plans.manifest import (  # noqa: E402
     ManifestStore,
     run_resumable,
 )
-from machine_readability_checker_spark.session import get_spark  # noqa: E402
+from machine_readability_checker_spark.session import (  # noqa: E402
+    default_cores,
+    get_spark,
+)
 from machine_readability_checker_spark.sources.fixtures import gen_corpus  # noqa: E402
 
 
@@ -100,14 +103,14 @@ def main() -> None:
         "--wave", type=int, default=4,
         help="splits per wave (0 = all remaining splits in ONE wave). "
         "Waves bound the failure blast radius and give resume its "
-        "granularity, but each wave carries fixed driver-side cost "
-        "(stage barriers, manifest commits, first-wave codegen) — size "
-        "waves for MINUTES of work, not seconds: at real corpus scale "
-        "the default is fine; on small benchmark corpora at high "
-        "core counts prefer --wave 0 (measured: 4-6 s waves at "
-        "local[32] cost ~40%% of wall in fixed overhead)",
+        "granularity. Each extraction task carries a fixed cost in its "
+        "Python worker: on CPython < 3.13 the importlib.invalidate_caches() "
+        "run before every task re-reads pyspark.zip's directory (0.25-0.45 s "
+        "of CPU per task on a 4-vCPU host), and the package's lazy zip "
+        "invalidation (zipimport_lazy) leaves that only on each worker's "
+        "first task. Size waves for minutes of work, not seconds",
     )
-    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cores", type=int, default=int(default_cores()))
     ap.add_argument("--partitions", type=int, default=0)
     ap.add_argument(
         "--max-waves", type=int, default=0,

@@ -37,7 +37,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from machine_readability_checker_spark.operators import dedup as D  # noqa: E402
-from machine_readability_checker_spark.session import get_spark  # noqa: E402
+from machine_readability_checker_spark.session import (  # noqa: E402
+    default_cores,
+    get_spark,
+)
 
 MH = dict(num_perm=64, bands=16, shingle_k=3)
 
@@ -77,7 +80,7 @@ def main() -> None:
     ap.add_argument("--gen", type=int, default=0, help="self-generate N docs")
     ap.add_argument("--threshold", type=float, default=0.5)
     ap.add_argument(
-        "--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        "--cores", type=int, default=int(default_cores())
     )
     ap.add_argument("--n-buckets", type=int, default=64)
     args = ap.parse_args()

@@ -39,7 +39,10 @@ from machine_readability_checker_spark.operators.multimodal import (  # noqa: E4
     media_from_spans,
     resize_images,
 )
-from machine_readability_checker_spark.session import get_spark  # noqa: E402
+from machine_readability_checker_spark.session import (  # noqa: E402
+    default_cores,
+    get_spark,
+)
 
 
 def _gen_interleaved(spark, n_docs: int):
@@ -260,7 +263,7 @@ def main() -> None:
     )
     ap.add_argument(
         "--cores", type=int,
-        default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        default=int(default_cores()),
     )
     args = ap.parse_args()
 

@@ -45,7 +45,10 @@ from machine_readability_checker_spark.operators import (  # noqa: E402
 from machine_readability_checker_spark.operators.repartition import (  # noqa: E402
     split_id,
 )
-from machine_readability_checker_spark.session import get_spark  # noqa: E402
+from machine_readability_checker_spark.session import (  # noqa: E402
+    default_cores,
+    get_spark,
+)
 from machine_readability_checker_spark.sources.iceberg_table import (  # noqa: E402
     IcebergLayoutTable,
     TableMaintenance,
@@ -113,7 +116,7 @@ def main() -> None:
         "paths) first — the self-contained verify surface",
     )
     ap.add_argument("--cores", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+                    default=int(default_cores()))
     args = ap.parse_args()
 
     t0 = time.time()

@@ -39,7 +39,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from machine_readability_checker_spark.session import get_spark  # noqa: E402
+from machine_readability_checker_spark.session import (  # noqa: E402
+    default_cores,
+    get_spark,
+)
 
 
 def main() -> None:
@@ -67,7 +70,7 @@ def main() -> None:
     )
     ap.add_argument(
         "--cores", type=int,
-        default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        default=int(default_cores()),
     )
     args = ap.parse_args()
 

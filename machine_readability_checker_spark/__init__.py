@@ -24,3 +24,10 @@ This package re-expresses all of that Spark-first:
 """
 
 __version__ = "0.1.0"
+
+# Every Python worker that runs a kernel imports this package first (the
+# kernel's pickle references it), which makes this the one place to fix the
+# worker's per-task import-cache cost for all mapInPandas/pandas_udf code.
+from .zipimport_lazy import install as _install_lazy_zip_invalidation
+
+_install_lazy_zip_invalidation()

@@ -8,7 +8,20 @@ for local runs:
   ``content`` blobs cannot blow Python-worker memory (SURVEY.md §4.2);
 - shuffle partitions sized to the local core count (on a cluster this is
   set to ~2-3× total cores via spark-submit conf, or left to AQE's
-  coalescing).
+  coalescing);
+- the local core count is ``SPARK_GRAFT_CPUS`` when set, otherwise the
+  CPUs this process may run on (:func:`default_cores`), so a small host
+  does not start more Python workers than it has cores.
+
+Python-worker bootstrap: every Arrow UDF task runs
+``importlib.invalidate_caches()`` before it starts, which on CPython < 3.13
+re-reads the central directory of ``pyspark.zip`` once per cached zip
+importer (about 0.3 s of CPU per task).  Importing this package installs
+the lazy invalidation CPython 3.13 ships (``zipimport_lazy``), and every
+worker imports the package when it unpickles a kernel, so only a worker's
+first task pays that cost.  It needs no conf key and no custom
+``spark.python.daemon.module``: with ``--py-files`` the package reaches a
+worker's ``sys.path`` per task, after the daemon has started.
 """
 
 from __future__ import annotations
@@ -21,13 +34,18 @@ from pyspark.sql import SparkSession
 ARROW_MAX_RECORDS_PER_BATCH = 256
 
 
+def default_cores() -> str:
+    """``SPARK_GRAFT_CPUS`` if set, else the number of usable CPUs."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "mrc-spark",
     master: Optional[str] = None,
     shuffle_partitions: Optional[int] = None,
     extra_conf: Optional[Dict[str, str]] = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cores()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         try:

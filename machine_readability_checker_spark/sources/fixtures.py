@@ -1063,8 +1063,10 @@ FAMILIES = [
 def gen_doc(i: int, seed: int = SEED, whale_every: Optional[int] = 97,
             chosen=None) -> Dict[str, Any]:
     """Deterministically generate fixture document #i (index-keyed RNG, so
-    generation is embarrassingly parallel)."""
-    rng = np.random.RandomState(seed * 1_000_003 + i)
+    generation is embarrassingly parallel).  The RNG seed is taken mod 2**32
+    (numpy's range); below that it is unchanged, so every seed that worked
+    before still yields the same document."""
+    rng = np.random.RandomState((seed * 1_000_003 + i) % 2**32)
     fams = chosen or FAMILIES
     if whale_every and i > 0 and i % whale_every == 0:
         d = fam_whale(rng, i)
